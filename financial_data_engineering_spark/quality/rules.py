@@ -392,6 +392,11 @@ class CustomRule(Rule):
         return CompiledRule(self, standalone=run)
 
 
+#: Alias of the row count in the fused aggregate; cannot collide with
+#: rule tags (``__<hex id>_...``).
+_ROW_COUNT = "__row_count"
+
+
 class RuleSet:
     """Named, ordered rule collection. ``evaluate`` fuses every
     expression-compilable rule into a single aggregation job (one table
@@ -407,12 +412,21 @@ class RuleSet:
         return self
 
     def evaluate(self, df: DataFrame) -> list[RuleResult]:
+        return self._evaluate(df, count_rows=False)[0]
+
+    def _evaluate(
+        self, df: DataFrame, count_rows: bool
+    ) -> tuple[list[RuleResult], int | None]:
+        """:meth:`evaluate`, plus the frame's row count when ``count_rows``:
+        one more expression in the fused aggregate, which then runs even
+        when no rule is fusable, so the count costs no action of its own."""
         compiled = [rule.compile(df) for rule in self.rules]
-        fused = [c for c in compiled if c.exprs]
+        exprs = [e for c in compiled for e in c.exprs]
+        if count_rows:
+            exprs.append(F.count(F.lit(1)).alias(_ROW_COUNT))
         fused_row: dict[str, Any] = {}
-        if fused:
-            all_exprs = [e for c in fused for e in c.exprs]
-            fused_row = df.agg(*all_exprs).collect()[0].asDict()
+        if exprs:
+            fused_row = df.agg(*exprs).collect()[0].asDict()
 
         results: list[RuleResult] = []
         for c in compiled:
@@ -422,7 +436,7 @@ class RuleSet:
                 results.append(c.finalize(fused_row))
             else:
                 results.append(c.standalone())
-        return results
+        return results, fused_row.get(_ROW_COUNT)
 
     def __len__(self) -> int:
         return len(self.rules)

@@ -2,17 +2,16 @@
 
 Same public API as the reference validator (src/quality/validator.py:16-67)
 over Spark frames. ``validate`` triggers one fused aggregation job for all
-expression rules, one job per key-uniqueness rule, and a ``count()`` for
-frame stats (metadata-only on parquet scans).
+expression rules and the frame's row count, one job per key-uniqueness
+rule, and whatever jobs each custom rule runs itself.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 from financial_data_engineering_spark.quality.report import ValidationReport
-from financial_data_engineering_spark.quality.rules import Rule, RuleResult, RuleSet
+from financial_data_engineering_spark.quality.rules import Rule, RuleSet
 
 
 class DataValidator:
@@ -44,11 +43,12 @@ class DataValidator:
         return len(self._ruleset)
 
     def validate(self, df: DataFrame) -> ValidationReport:
-        """Run all rules; returns pass/fail status per rule plus frame stats."""
-        results: list[RuleResult] = self._ruleset.evaluate(df)
+        """Run all rules; returns pass/fail status per rule plus frame stats
+        (the row count comes from the rules' fused aggregate)."""
+        results, row_count = self._ruleset._evaluate(df, count_rows=True)
         return ValidationReport(
             name=self.name,
             results=results,
-            row_count=df.count(),
+            row_count=row_count,
             column_count=len(df.columns),
         )

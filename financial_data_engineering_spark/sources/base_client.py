@@ -41,6 +41,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from financial_data_engineering_spark.llm.caching import persist_tracked
 from financial_data_engineering_spark.sources.result import ExtractionResult
 
 
@@ -317,8 +318,9 @@ class BaseClient(ABC):
         task before launch so overlapping driver requests stay inside the
         global quota; tasks self-throttle to rate_limit/n_slices and
         stagger their first request (see the fetchers). The caller must
-        materialize through :meth:`_finalize_fanouts` so attempt counts
-        land in telemetry and the fetch runs exactly once."""
+        finish through :meth:`_build_result`, whose one counting action runs
+        the fetch exactly once and then credits the attempt counts into
+        telemetry."""
         n_slices = max(1, min(len(specs), max_tasks))
         delay_s = 60.0 * n_slices / self.rate_limit
         for _ in range(n_slices):
@@ -331,24 +333,6 @@ class BaseClient(ABC):
             list(specs), n_slices
         ).mapPartitions(fetch)
         return self.spark.read.schema(schema).json(rdd)
-
-    def _finalize_fanouts(self, df: DataFrame) -> DataFrame:
-        """Materialize a frame containing fan-out lineage exactly once
-        (persist + count), inside the caller's lifecycle try so executor
-        errors become an error result, then credit the accumulated real
-        HTTP attempts into ``api_calls``. Re-collecting the returned frame
-        replays the persisted cache, not the fetch. No-op without pending
-        fan-outs."""
-        if not self._pending_fanout_accs:
-            return df
-        df = df.persist()
-        df.count()
-        self.fanout_http_attempts = sum(
-            acc.value for acc in self._pending_fanout_accs
-        )
-        self.api_calls += self.fanout_http_attempts
-        self._pending_fanout_accs = []
-        return df
 
     # -- JSON → DataFrame -----------------------------------------------------
 
@@ -373,13 +357,27 @@ class BaseClient(ABC):
         started_at: datetime,
         warnings: list[str] | None = None,
     ) -> ExtractionResult:
-        """Success envelope; ``records`` is the one eager count
-        (base_client.py:249-271)."""
+        """Success envelope (base_client.py:249-271). ``df`` is persisted
+        through :func:`persist_tracked`, so the ``count()`` that yields
+        ``records`` is also the one action that materializes it: later actions
+        on ``data`` read the cached blocks instead of replaying the fetch
+        and ``from_json``, and :func:`release_intermediates` frees them.
+        Pending fan-out attempts are credited into ``api_calls`` once that
+        action has made the accumulators final. Executor fetch errors raise
+        out of the count, inside the caller's lifecycle ``try``."""
+        df = persist_tracked(df)
+        records = df.count()
+        if self._pending_fanout_accs:
+            self.fanout_http_attempts = sum(
+                acc.value for acc in self._pending_fanout_accs
+            )
+            self.api_calls += self.fanout_http_attempts
+            self._pending_fanout_accs = []
         completed = datetime.now(timezone.utc)
         return ExtractionResult(
             success=True,
             source=self.source_name,
-            records=df.count(),
+            records=records,
             api_calls=self.api_calls,
             cache_hits=self.cache_hits,
             started_at=started_at,

@@ -114,8 +114,7 @@ class OpenMeteoClient(BaseClient):
                         continue
                     payloads.append(json.dumps({"location": name, "daily": daily}))
                 raw = self.json_to_df(payloads, _located_schema(variables))
-            combined = self._finalize_fanouts(self._pivot(raw, variables))
-            return self._build_result(combined, started)
+            return self._build_result(self._pivot(raw, variables), started)
         except Exception as exc:  # noqa: BLE001 — lifecycle contract: never raise
             return self._build_error(str(exc), started)
 

@@ -2,9 +2,10 @@
 
 API parity with the reference's ExtractionResult
 (/root/reference/src/extractors/result.py:15-48), with ``data`` holding a
-lazy :class:`pyspark.sql.DataFrame` instead of pandas. ``records`` is
+persisted :class:`pyspark.sql.DataFrame` instead of pandas. ``records`` is
 populated by an explicit ``count()`` at build time — the one deliberate
-eager action in the extraction path (SURVEY.md §7.3, eager→lazy friction).
+eager action in the extraction path (SURVEY.md §7.3, eager→lazy friction),
+which also materializes ``data``.
 """
 
 from __future__ import annotations
@@ -18,7 +19,15 @@ from pyspark.sql import DataFrame
 
 @dataclass
 class ExtractionResult:
-    """Outcome of one extraction: telemetry counters plus the (lazy) data."""
+    """Outcome of one extraction: telemetry counters plus the data.
+
+    ``data`` is persisted and already materialized by the count behind
+    ``records``, so every later action reads cached blocks rather than
+    re-running the fetch and parse. The blocks stay until
+    :func:`~financial_data_engineering_spark.llm.caching.release_intermediates`
+    or ``spark.catalog.clearCache()`` frees them; an action after that
+    recomputes the frame from its lineage.
+    """
 
     success: bool
     source: str

@@ -84,10 +84,11 @@ class WorldBankClient(BaseClient):
         """One paginated walk per indicator (date range pushed into the
         request), all unioned into one frame (world_bank.py:65-84).
 
-        The union is materialized (persist + count) exactly once here, so
-        executor-side fetch errors surface inside the lifecycle try block
-        (extract never raises) and re-collecting ``result.data`` replays
-        the cache, not the HTTP fetch."""
+        The union is materialized once, by :meth:`_build_result`'s
+        persisting count inside the lifecycle try block, so executor-side
+        fetch errors become an error result (extract never raises) and
+        re-collecting ``result.data`` replays the cache, not the HTTP
+        fetch."""
         started = datetime.now(timezone.utc)
         self.reset_telemetry()
         self._pending_fanout_accs = []
@@ -102,8 +103,7 @@ class WorldBankClient(BaseClient):
             raw = frames[0]
             for f in frames[1:]:
                 raw = raw.unionByName(f)
-            df = self._finalize_fanouts(self._normalize(raw))
-            return self._build_result(df, started)
+            return self._build_result(self._normalize(raw), started)
         except Exception as exc:  # noqa: BLE001 — lifecycle contract: never raise
             return self._build_error(str(exc), started)
 
@@ -170,7 +170,7 @@ class WorldBankClient(BaseClient):
         compose with unordered tasks. Actual per-attempt HTTP counts come
         back through an accumulator, credited to api_calls after the
         materializing action (see BaseClient._fanout_json /
-        _finalize_fanouts)."""
+        _build_result)."""
         url = f"{self.base_url}{path}"
         headers = dict(self._session.headers)
         params = dict(base_params)

@@ -5,6 +5,8 @@ Spark DataFrames.
 
 from __future__ import annotations
 
+import itertools
+
 import pytest
 from pyspark.sql import SparkSession
 
@@ -18,6 +20,26 @@ SF_MEDIUM = "/root/testdata/sf0.01"
 def spark() -> SparkSession:
     session = get_spark("tests", shuffle_partitions=8)
     yield session
+
+
+@pytest.fixture()
+def job_count(spark):
+    """``job_count(fn)`` -> ``(fn(), jobs)``: the Spark jobs ``fn`` ran,
+    read from a job group unique to the call (the way perfbench/tracing.py
+    counts them), so jobs of earlier calls never mix in."""
+    sc = spark.sparkContext
+    calls = itertools.count()
+
+    def run(fn):
+        group = f"job_count-{id(run):x}-{next(calls)}"
+        sc.setJobGroup(group, "")
+        try:
+            out = fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+    return run
 
 
 @pytest.fixture()

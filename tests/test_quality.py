@@ -10,6 +10,7 @@ from financial_data_engineering_spark.quality import (
     CompletenessRule,
     CustomRule,
     DataValidator,
+    FreshnessRule,
     PatternRule,
     RangeRule,
     RuleSet,
@@ -197,3 +198,63 @@ class TestFreshnessRule:
         rs.add(FreshnessRule("ts", 48, "2024-01-31 00:00:00"))
         results = rs.evaluate(ev)
         assert all(r.passed for r in results)
+
+
+class TestValidatorJobs:
+    """``validate`` reads the row count from the rules' fused aggregate:
+    a frame with only fusable rules costs one aggregate action, the jobs
+    of a bare ``df.agg(count(1)).collect()`` (under AQE that is a map-stage
+    job plus the result job)."""
+
+    @staticmethod
+    def _validator():
+        return DataValidator("fusable").add_rules(
+            [
+                CompletenessRule(["ticker", "ts"]),
+                RangeRule("price", min_val=0),
+                PatternRule("email", r"[^@]+@[^@]+"),
+                FreshnessRule("ts", 48, "2024-01-31 00:00:00"),
+            ]
+        )
+
+    @staticmethod
+    def _frame(spark, rows):
+        return spark.createDataFrame(
+            rows, "ticker string, price double, email string, ts timestamp"
+        )
+
+    def _assert_one_aggregate(self, df, job_count):
+        _, one_agg = job_count(lambda: df.agg(F.count(F.lit(1))).collect())
+        report, jobs = job_count(lambda: self._validator().validate(df))
+        assert jobs == one_agg
+        assert report.row_count == df.count()
+        return report
+
+    def test_fusable_rules_and_row_count_share_one_job(self, spark, job_count):
+        from datetime import datetime
+
+        df = self._frame(
+            spark,
+            [
+                ("AAPL", 150.0, "ir@apple.com", datetime(2024, 1, 30)),
+                ("MSFT", -1.0, "nope", datetime(2024, 1, 29)),
+                (None, 2.0, None, None),
+            ],
+        )
+        report = self._assert_one_aggregate(df, job_count)
+        assert report.row_count == 3
+        assert [r.passed for r in report.results] == [False, False, False, True]
+
+    def test_empty_frame_counts_zero_rows_in_one_job(self, spark, job_count):
+        report = self._assert_one_aggregate(self._frame(spark, []), job_count)
+        assert report.row_count == 0
+
+    def test_no_fusable_rule_still_runs_one_aggregate(self, spark, job_count):
+        """The row count alone keeps the aggregate: an empty rule set
+        validates with exactly one aggregate action, while
+        ``RuleSet.evaluate`` on the same empty set runs no job at all."""
+        df = self._frame(spark, [("AAPL", 1.0, "a@b", None)])
+        _, one_agg = job_count(lambda: df.agg(F.count(F.lit(1))).collect())
+        report, jobs = job_count(lambda: DataValidator("none").validate(df))
+        assert (report.row_count, report.results, jobs) == (1, [], one_agg)
+        assert job_count(lambda: RuleSet("none").evaluate(df)) == ([], 0)

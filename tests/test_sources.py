@@ -495,3 +495,125 @@ class TestWorldBank:
             result = client.extract(indicators=["NY.GDP.PCAP.CD"])
         assert not result.success
         assert "all fetch attempts failed" in result.error
+
+
+# -- materialization: one counting job per extraction -------------------------
+
+
+def _persisted_count_jobs(spark, job_count) -> int:
+    """Jobs of the first ``count()`` on a freshly persisted frame: the
+    count that also fills the cache (under AQE, a cache-fill job plus the
+    aggregate's map-stage and result jobs)."""
+    probe = spark.createDataFrame([("x",)], "raw string").persist()
+    try:
+        return job_count(probe.count)[1]
+    finally:
+        probe.unpersist()
+
+
+def _cache_loaded(spark, df) -> bool:
+    """``df`` is registered in the cache AND its blocks are built, so the
+    next action scans them instead of replaying the lineage."""
+    cached = spark._jsparkSession.sharedState().cacheManager().lookupCachedData(
+        df._jdf
+    )
+    return bool(
+        cached.isDefined()
+        and cached.get().cachedRepresentation().cacheBuilder()
+        .isCachedColumnBuffersLoaded()
+    )
+
+
+def _assert_released(spark, df):
+    """``release_intermediates`` frees the extraction frame's blocks."""
+    from financial_data_engineering_spark.llm.caching import (
+        release_intermediates,
+    )
+
+    assert release_intermediates() >= 1
+    level = df.storageLevel
+    assert not (level.useMemory or level.useDisk)
+    assert not _cache_loaded(spark, df)
+
+
+def _wb_fanout_fetcher(rec):
+    def fake_fetcher(url, base_params, headers, delay_s, n_slices, acc):
+        def fetch(pages_iter):
+            import json as _json
+
+            for p in pages_iter:
+                acc.add(1)
+                yield _json.dumps(dict(rec, date=str(p)))
+
+        return fetch
+
+    return fake_fetcher
+
+
+def _meteo_fanout_fetcher(daily):
+    def fake_fetcher(url, base_params, headers, delay_s, n_slices, acc):
+        def fetch(locs_iter):
+            import json as _json
+
+            for lat, lon, name in locs_iter:
+                acc.add(1)
+                yield _json.dumps({"location": name, "daily": daily})
+
+        return fetch
+
+    return fake_fetcher
+
+
+class TestMaterializeOnce:
+    """``_build_result`` persists the extraction frame (tracked) and its
+    ``records`` count is the one action that fills the cache: no path
+    counts twice, later actions never re-fetch or re-parse, and
+    ``release_intermediates`` frees the blocks on every path."""
+
+    def test_driver_path_counts_once_and_keeps_the_parse(
+        self, spark, mock_geojson, job_count
+    ):
+        one = _persisted_count_jobs(spark, job_count)
+        client = USGSClient(spark)
+        with patch.object(client, "_get", return_value=mock_geojson):
+            result, jobs = job_count(lambda: client.extract(max_results=10))
+        assert result.success and result.records == 3
+        assert jobs == one
+        # the blocks were built by that count: a second action scans the
+        # cache, with no from_json re-parse of the driver-side payloads
+        assert result.data.storageLevel.useMemory
+        assert _cache_loaded(spark, result.data)
+        assert result.data.count() == 3
+        _assert_released(spark, result.data)
+
+    def test_world_bank_fanout_counts_once(self, spark, mock_worldbank, job_count):
+        one = _persisted_count_jobs(spark, job_count)
+        client = WorldBankClient(spark)
+        page1 = [dict(mock_worldbank[0], pages=12), mock_worldbank[1]]
+        with patch.object(client, "_get", side_effect=[page1]), patch.object(
+            client, "_page_fetcher",
+            side_effect=_wb_fanout_fetcher(mock_worldbank[1][0]),
+        ):
+            result, jobs = job_count(
+                lambda: client.extract(indicators=["NY.GDP.PCAP.CD"])
+            )
+        assert result.success and result.records == 3 + 11
+        assert jobs == one
+        assert client.fanout_http_attempts == client.api_calls == 11
+        assert _cache_loaded(spark, result.data)
+        _assert_released(spark, result.data)
+
+    def test_open_meteo_fanout_counts_once(self, spark, mock_weather, job_count):
+        one = _persisted_count_jobs(spark, job_count)
+        client = OpenMeteoClient(spark)
+        locs = [(float(i), float(i), f"L{i}") for i in range(9)]
+        with patch.object(client, "_get"), patch.object(
+            client, "_location_fetcher",
+            side_effect=_meteo_fanout_fetcher(mock_weather["daily"]),
+        ):
+            result, jobs = job_count(lambda: client.extract(locations=locs))
+        assert result.success and result.records == 9 * 3
+        assert jobs == one
+        assert client.fanout_http_attempts == client.api_calls == 9
+        assert _cache_loaded(spark, result.data)
+        _assert_released(spark, result.data)

@@ -49,7 +49,7 @@ def _run_leg(repo_dir: str, queries: str, sf_dir: str, runs: int = 1) -> dict:
     env = dict(os.environ)
     env["SPARK_GRAFT_BENCH_ONLY"] = queries
     env["SPARK_GRAFT_BENCH_RUNS"] = str(runs)
-    env.setdefault("SPARK_GRAFT_SF_DIR", sf_dir)
+    env["SPARK_GRAFT_SF_DIR"] = sf_dir
     base = os.path.basename(sf_dir.rstrip("/"))
     out_path = os.path.join(repo_dir, "reports", "bench", f"restricted_{base}.json")
     if os.path.exists(out_path):
@@ -91,9 +91,9 @@ def main() -> None:
     diff_stat = _git("diff", "--stat", args.base_ref) or "(no tracked diff)"
 
     wt_dir = tempfile.mkdtemp(prefix="fdes_ab_base_")
-    _git("worktree", "add", "--detach", wt_dir, base_sha)
     legs: list[dict] = []
     try:
+        _git("worktree", "add", "--detach", wt_dir, base_sha)
         # Interleave with alternating order so slow drift hits both sides
         # symmetrically: (B,T), (T,B), (B,T), ...
         for i in range(args.legs):
@@ -117,7 +117,12 @@ def main() -> None:
                     flush=True,
                 )
     finally:
-        _git("worktree", "remove", "--force", wt_dir)
+        # a failed remove (e.g. the add itself failed) must not mask the
+        # error that ended the run
+        try:
+            _git("worktree", "remove", "--force", wt_dir)
+        except subprocess.CalledProcessError as exc:
+            sys.stderr.write(f"warning: {exc}\n")
         shutil.rmtree(wt_dir, ignore_errors=True)
 
     names = sorted(
@@ -126,13 +131,13 @@ def main() -> None:
     medians: dict[str, dict[str, float]] = {"base": {}, "target": {}}
     for side in ("base", "target"):
         for n in names:
-            vals = sorted(
+            vals = [
                 leg["queries"][n]
                 for leg in legs
                 if leg["side"] == side and leg["queries"].get(n, -1) >= 0
-            )
+            ]
             if vals:
-                medians[side][n] = vals[len(vals) // 2]
+                medians[side][n] = statistics.median(vals)
     speedup = {
         n: round(medians["base"][n] / medians["target"][n], 3)
         for n in names
